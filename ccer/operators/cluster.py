@@ -77,6 +77,24 @@ def _small_star(edges: DataFrame) -> DataFrame:
     ).distinct()
 
 
+def _is_star_forest(edges: DataFrame) -> bool:
+    """True iff no node has two outgoing edges and no node has both an
+    outgoing and an incoming edge: every source points at exactly one
+    target (``edges`` holds distinct rows, small-star's output) and no
+    target is a source. One groupBy over both edge ends, then a global
+    flag — a single collect, also on an empty edge set (converged)."""
+    ends = edges.select(
+        F.col("id_a").alias("node"), F.lit(1).alias("n_out"), F.lit(False).alias("is_target")
+    ).unionAll(
+        edges.select(F.col("id_b").alias("node"), F.lit(0), F.lit(True))
+    )
+    per_node = ends.groupBy("node").agg(
+        F.sum("n_out").alias("n_out"), F.max("is_target").alias("is_target")
+    )
+    bad = (F.col("n_out") > 1) | ((F.col("n_out") > 0) & F.col("is_target"))
+    return not per_node.agg(F.bool_or(bad)).first()[0]
+
+
 def connected_components(
     edges: DataFrame, max_iterations: int = 50
 ) -> DataFrame:
@@ -87,13 +105,14 @@ def connected_components(
 
     Convergence detection: the loop stops as soon as the edge set IS a
     converged star forest — every source points at exactly one target
-    (count == distinct sources) and no target is itself a source (no
-    depth-2 chains). Both checks read the just-checkpointed rows (cheap
-    cached-RDD passes). This is a direct structural test, so it breaks
-    WITHOUT computing the extra confirmation round that a
-    digest-equality test needs — one full large-star/small-star round
-    saved per run, and each round is latency-bound (several shuffle
-    barriers) rather than data-bound once the graph has collapsed.
+    and no target is itself a source (no depth-2 chains). Both halves
+    come from ONE aggregation over the just-checkpointed rows
+    (``_is_star_forest``): one small collect per round. This is a
+    direct structural test, so it breaks WITHOUT computing the extra
+    confirmation round that a digest-equality test needs — one full
+    large-star/small-star round saved per run, and each round is
+    latency-bound (several shuffle barriers) rather than data-bound once
+    the graph has collapsed.
 
     Why the test is sufficient: small-star output always has
     id_b < id_a (targets are per-star minima), so a depth-1 forest with
@@ -120,20 +139,8 @@ def connected_components(
         current = _small_star(_large_star(current))
         current = current.localCheckpoint(eager=True, storageLevel=level)
         unpersist_checkpoint(prev)
-        row = current.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.countDistinct("id_a").alias("nd"),
-        ).collect()[0]
-        if row["n"] == row["nd"]:
-            # unique sources; converged iff additionally no chains
-            targets_that_are_sources = (
-                current.select("id_b")
-                .join(current.select(F.col("id_a").alias("id_b")), "id_b", "left_semi")
-                .limit(1)
-                .count()
-            )
-            if targets_that_are_sources == 0:
-                break
+        if _is_star_forest(current):
+            break
     # converged star graph: every edge is (node, root); roots map to themselves
     nodes = current.select(F.col("id_a").alias("id"), F.col("id_b").alias("component"))
     roots = current.select(F.col("id_b").alias("id"), F.col("id_b").alias("component"))

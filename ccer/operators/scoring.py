@@ -395,6 +395,13 @@ def _numpy_cosine_pass(slim: DataFrame, sketch_k: int) -> DataFrame:
 
             def flat_offs(name):
                 arr = cols[name]
+                # flatten() drops a null entry's values while its offsets
+                # keep the span, which would shift every later row's
+                # gather; features always emits a non-null sketch
+                if arr.null_count != 0:
+                    raise ValueError(
+                        f"{name}: {arr.null_count} null sketch entries in the cosine pass"
+                    )
                 # flatten() honors the array's own offset window; offsets
                 # re-based so index 0 addresses the flattened values
                 flat = arr.flatten().to_numpy(zero_copy_only=False)

@@ -41,7 +41,7 @@ from ccer.operators.cluster import connected_components
 from ccer.operators.dedup import decontaminate, exact_dedup, minhash_neardup_pairs
 from ccer.operators.quality import repetition_signals
 from ccer.operators.textstats import stratified_sample
-from ccer.sources.catalog import StageStore
+from ccer.sources.catalog import StageStore, input_fingerprint
 
 CURATION_STAGE_ORDER = ["docs", "exact", "neardup", "quality", "decontam", "sample"]
 
@@ -96,7 +96,9 @@ def run_curation(
     pass-through stage would write a full extra copy of the data.
     """
     cfg = config or CurationConfig()
-    store = StageStore(spark, workdir, fingerprint=cfg.fingerprint())
+    store = StageStore(
+        spark, workdir, fingerprint=f"{cfg.fingerprint()}-{input_fingerprint(pages)}"
+    )
     if not resume:
         store.invalidate_from("docs", CURATION_STAGE_ORDER)
 

@@ -26,7 +26,7 @@ from ccer.operators.blocking import block_keys, candidate_pairs, salt_oversized_
 from ccer.operators.cluster import assign_clusters, connected_components
 from ccer.operators.features import extract_features
 from ccer.operators.scoring import ScoringConfig, match_edges, score_pairs
-from ccer.sources.catalog import StageStore
+from ccer.sources.catalog import StageStore, input_fingerprint
 
 STAGE_ORDER = ["features", "blocks", "pairs", "edges", "components", "clusters"]
 
@@ -87,7 +87,9 @@ def run_pipeline(
     """Run (or resume) the full ER pipeline; returns the clusters table
     (rid, id, url, warc_ts, lang, cluster_id, ...)."""
     cfg = config or PipelineConfig()
-    store = StageStore(spark, workdir, fingerprint=cfg.fingerprint())
+    store = StageStore(
+        spark, workdir, fingerprint=f"{cfg.fingerprint()}-{input_fingerprint(pages)}"
+    )
     if not resume:
         store.invalidate_from("features", STAGE_ORDER)
 

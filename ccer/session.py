@@ -187,6 +187,12 @@ def get_spark(
             os.environ.get("CCER_WAREHOUSE_DIR", "/tmp/ccer-spark-warehouse"),
         )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # PySpark 4 captures the Python call site of every Column and
+        # F.* call for error messages: a stack inspection plus ~4 py4j
+        # round trips each, about half of all Python<->JVM calls an ER
+        # call makes. Off, Spark errors lose the Python line; turn it
+        # back on with CCER_EXTRA_CONF when debugging a plan.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # ad-hoc overrides for benchmarking/ops: CCER_EXTRA_CONF="k=v;k2=v2"
     env_conf = os.environ.get("CCER_EXTRA_CONF", "")
@@ -201,8 +207,14 @@ def get_spark(
 
 
 def checkpoint_level():
-    """Storage level for the engine's INTERNAL localCheckpoints (CC
-    rounds, the scorer's decided/ambiguous split, the salt join-back).
+    """Storage level for the connected-components round checkpoints
+    (``cluster.connected_components``) and nothing else.
+
+    The scorer's decided/ambiguous split (scoring.py) and the salt
+    join-back (blocking.py) deliberately keep localCheckpoint's default
+    DESERIALIZED level: they are read several times each, and serialized
+    storage measured ~5x the read CPU there (see the comment at the salt
+    checkpoint in blocking.py). Do not switch them to this level.
 
     Default DataFrame.localCheckpoint caches DESERIALIZED on-heap rows:
     every checkpointed row is a live heap object (plus per-field boxes

@@ -32,6 +32,32 @@ import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
+
+
+def input_fingerprint(df: DataFrame) -> str:
+    """Identity of a pipeline's input, for the stage fingerprint, so a
+    resume never returns the stages of a different input.
+
+    A file scan is identified by its canonicalized analyzed plan (stable
+    across sessions; it tells a filtered or projected read from the bare
+    one) plus every input file's path, size and modification time, so a
+    rewritten file changes it. Any other input (generated, in-memory) is
+    identified by the plan's ``semanticHash``, which holds only within one
+    session: such an input resumes in the session that made it and is
+    recomputed in a new one."""
+    files = sorted(df.inputFiles())
+    if not files:
+        return f"plan{df.semanticHash()}"
+    plan = df._jdf.queryExecution().analyzed().canonicalized().toString()
+    h = hashlib.sha256(plan.encode())
+    jvm = df.sparkSession.sparkContext._jvm
+    conf = df.sparkSession.sparkContext._jsc.hadoopConfiguration()
+    for f in files:
+        path = jvm.org.apache.hadoop.fs.Path(f)
+        status = path.getFileSystem(conf).getFileStatus(path)
+        h.update(f"\n{f}\t{status.getLen()}\t{status.getModificationTime()}".encode())
+    return h.hexdigest()[:16]
 
 
 class StageStore:
@@ -41,7 +67,6 @@ class StageStore:
         base_dir: str,
         table_format: str = "auto",
         fingerprint: str | None = None,
-        bucket_count: int = 64,
     ):
         self.spark = spark
         self.base_dir = base_dir
@@ -51,7 +76,6 @@ class StageStore:
             table_format = "iceberg" if self._iceberg_available() else "parquet"
         self.table_format = table_format
         self.fingerprint = fingerprint
-        self.bucket_count = bucket_count
 
     def _iceberg_available(self) -> bool:
         try:
@@ -123,9 +147,13 @@ class StageStore:
         equi-joins on that key then read co-located, pre-sorted buckets
         and skip the stage-side exchange entirely (the heavy features
         payload — signatures + sketches — is shuffled once at write time
-        instead of once per consuming join). Same-session reads resolve
-        through the catalog table; a resume in a fresh session falls back
-        to the plain parquet path (correct, just unbucketed)."""
+        instead of once per consuming join). The bucket count is the
+        session's ``spark.sql.shuffle.partitions`` at write time: a
+        bucketed side skips its exchange only when it has at least that
+        many buckets, and more buckets than that only add write tasks and
+        files. Same-session reads resolve through the catalog table; a
+        resume in a fresh session re-registers the table with the bucket
+        count the manifest recorded."""
         # ``start``: pass the timestamp from BEFORE the stage's plan was
         # built when the plan construction itself executes work (the
         # scorer's eager localCheckpoint materializes the whole pairwise
@@ -133,6 +161,8 @@ class StageStore:
         # excludes the stage's dominant cost (measured: ~50 s of scoring
         # invisible between 'pairs' and 'edges' at 960k pages).
         start = time.time() if start is None else start
+        if bucket_by or self.table_format == "iceberg":
+            n_buckets = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         if self.table_format == "iceberg":
             writer = df.writeTo(f"ccer.{name}")
             if partition_by:
@@ -141,7 +171,7 @@ class StageStore:
                 # bucket on the join/shuffle key so stage reads are
                 # co-located for the downstream self-joins
                 writer = writer.partitionedBy(
-                    F.bucket(self.bucket_count, F.col(bucket_by or "id"))
+                    F.bucket(n_buckets, F.col(bucket_by or "id"))
                 )
             writer.createOrReplace()
         elif bucket_by:
@@ -152,9 +182,9 @@ class StageStore:
                 # one shuffle to bucket layout now; one file per bucket
                 # (repartition first), sorted within — consuming sort-merge
                 # joins skip both their exchange and their sort
-                df.repartition(self.bucket_count, F.col(bucket_by))
+                df.repartition(n_buckets, F.col(bucket_by))
                 .write.mode("overwrite")
-                .bucketBy(self.bucket_count, bucket_by)
+                .bucketBy(n_buckets, bucket_by)
                 .sortBy(bucket_by)
                 .option("path", self.path(name))
                 .format("parquet")
@@ -165,7 +195,10 @@ class StageStore:
             if partition_by:
                 writer = writer.partitionBy(*partition_by)
             writer.parquet(self.path(name))
-        out = self.read(name)
+        # the written schema is known: recording it lets every read (this
+        # one and each resume's) skip parquet's one-task schema-inference job
+        schema = df.schema.json()
+        out = self.read(name, schema)
         per_partition = self._lineage_counts(name, out)
         rows = sum(p["rows"] for p in per_partition)
         manifest = self._load_manifest()
@@ -177,7 +210,8 @@ class StageStore:
             "format": self.table_format,
             "fingerprint": self.fingerprint,
             "bucket_by": bucket_by,
-            "bucket_count": self.bucket_count if bucket_by else None,
+            "bucket_count": n_buckets if bucket_by else None,
+            "schema": schema,
             "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
         self._save_manifest(manifest)
@@ -220,31 +254,38 @@ class StageStore:
             .collect()
         ]
 
-    def read(self, name: str) -> DataFrame:
+    def read(self, name: str, schema: str | None = None) -> DataFrame:
+        """The stage's DataFrame. ``schema`` (JSON) is the written schema,
+        by default the one the manifest recorded; a manifest written before
+        schemas were recorded has none, and parquet infers it."""
         if self.table_format == "iceberg":
             return self.spark.read.table(f"ccer.{name}")
+        meta = self._load_manifest()["stages"].get(name, {})
+        schema = schema or meta.get("schema")
+        if schema is not None:
+            schema = StructType.fromJson(json.loads(schema))
         try:
             tbl = self._table_name(name)
             if self.spark.catalog.tableExists(tbl):
                 return self.spark.read.table(tbl)
-            meta = self._load_manifest()["stages"].get(name, {})
             if meta.get("bucket_by"):
                 # resume in a fresh session: re-register the external
                 # bucketed table over the existing files (bucket ids are
                 # encoded in the part-file name suffixes), so resumed
                 # plans keep the exchange-free joins
-                ddl = self.spark.read.parquet(self.path(name)).schema.toDDL()
+                ddl = (schema or self.spark.read.parquet(self.path(name)).schema).toDDL()
                 key = meta["bucket_by"]
                 self.spark.sql(
                     f"CREATE TABLE {tbl} ({ddl}) USING parquet "
                     f"CLUSTERED BY ({key}) SORTED BY ({key}) "
-                    f"INTO {meta.get('bucket_count') or self.bucket_count} BUCKETS "
+                    f"INTO {meta['bucket_count']} BUCKETS "
                     f"LOCATION '{self.path(name)}'"
                 )
                 return self.spark.read.table(tbl)
         except Exception:
             pass
-        return self.spark.read.parquet(self.path(name))
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self.path(name))
 
     def invalidate_from(self, name: str, order: list[str]) -> None:
         """Mark ``name`` and all later stages incomplete (re-run policy)."""

@@ -316,8 +316,8 @@ def main() -> None:
 ({args.docs:,} deterministic synthetic pages, seed=42, pre-materialized
 parquet), fresh JVM per run, {args.repeat} interleaved A/B rounds, each
 bracketed by a host-capacity burst. The features stage is bucketed on
-`id` (64 buckets), so the scoring joins read co-located buckets with no
-features-side exchange.
+`id` (one bucket per shuffle partition), so the scoring joins read
+co-located buckets with no features-side exchange.
 
 **Aggregation rule (stated, reproducible from the raw JSON below):**
 round i's efficiency uses that round's own elapsed pair and the mean of
