@@ -34,7 +34,7 @@ tighter cap than strong passes (url, MinHash bands).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 DEFAULT_PASSES = ("url", "host", "minhash", "simhash")
 PASS_URL, PASS_HOST, PASS_MINHASH, PASS_SIMHASH = 1, 2, 3, 4
@@ -264,12 +264,42 @@ def salt_oversized_blocks(
     return salted
 
 
+# SimHash Hamming bounds of the candidate-pair prefilter (see
+# ``pair_prefilter``): host-pass pairs, and every pass but url and host
 HOST_HAMMING_PREFILTER = 16
+HAMMING_PREFILTER = 26
+
+
+def pair_prefilter(
+    pass_id: Column,
+    fp_a: Column,
+    fp_b: Column,
+    hamming_prefilter: int = HAMMING_PREFILTER,
+    host_hamming_prefilter: int | None = HOST_HAMMING_PREFILTER,
+) -> Column:
+    """Keep condition for one in-block candidate pair with SimHash
+    fingerprints ``fp_a``/``fp_b`` found by blocking pass ``pass_id``:
+    url-pass pairs are always kept, host-pass pairs within
+    ``host_hamming_prefilter`` bits (never looser than
+    ``hamming_prefilter``), every other pass within ``hamming_prefilter``
+    bits. The batch plan (``candidate_pairs``) and the incremental pair
+    join (``streaming.ingest.pairs_touching``) both filter with it, so
+    they keep the same pairs."""
+    dist = F.bit_count(fp_a.bitwiseXOR(fp_b))
+    host_bound = (
+        hamming_prefilter if host_hamming_prefilter is None
+        else min(host_hamming_prefilter, hamming_prefilter)
+    )
+    return (
+        F.when(pass_id == PASS_URL, F.lit(True))
+        .when(pass_id == PASS_HOST, dist <= host_bound)
+        .otherwise(dist <= hamming_prefilter)
+    )
 
 
 def candidate_pairs(
     blocks: DataFrame,
-    hamming_prefilter: int | None = 26,
+    hamming_prefilter: int | None = HAMMING_PREFILTER,
     host_hamming_prefilter: int | None = HOST_HAMMING_PREFILTER,
 ) -> DataFrame:
     """In-block all-pairs → distinct candidate id pairs (id_a < id_b).
@@ -309,6 +339,9 @@ def candidate_pairs(
     generated 14.5M of 58M raw candidates). A pair that only the host
     pass finds is a same-site near-identical page, which sits at single-
     digit hamming; 16 bits keeps those while killing the correlated junk.
+
+    Both bounds are applied by ``pair_prefilter``, the filter the
+    incremental pair join (``streaming.ingest.pairs_touching``) shares.
     """
     # one shuffle of the slim block rows; singleton blocks (most of the
     # url pass) die here instead of riding a join
@@ -352,15 +385,10 @@ def candidate_pairs(
         F.col("_b.simhash").alias("fp_b"),
     ).filter(F.col("id_a") < F.col("id_b"))
     if hamming_prefilter is not None:
-        dist = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-        host_bound = (
-            hamming_prefilter if host_hamming_prefilter is None
-            else min(host_hamming_prefilter, hamming_prefilter)
+        joined = joined.filter(
+            pair_prefilter(
+                F.col("pass_id"), F.col("fp_a"), F.col("fp_b"),
+                hamming_prefilter, host_hamming_prefilter,
+            )
         )
-        keep = (
-            F.when(F.col("pass_id") == PASS_URL, F.lit(True))
-            .when(F.col("pass_id") == PASS_HOST, dist <= host_bound)
-            .otherwise(dist <= hamming_prefilter)
-        )
-        joined = joined.filter(keep)
     return joined.select("id_a", "id_b").dropDuplicates(["id_a", "id_b"])

@@ -22,7 +22,13 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ccer.operators.blocking import block_keys, candidate_pairs, salt_oversized_blocks
+from ccer.operators.blocking import (
+    HAMMING_PREFILTER,
+    HOST_HAMMING_PREFILTER,
+    block_keys,
+    candidate_pairs,
+    salt_oversized_blocks,
+)
 from ccer.operators.cluster import assign_clusters, connected_components
 from ccer.operators.features import extract_features
 from ccer.operators.scoring import ScoringConfig, match_edges, score_pairs
@@ -44,8 +50,8 @@ class PipelineConfig:
         salt_bits_max: int = 20,
         passes=("url", "host", "minhash", "simhash"),
         scoring: ScoringConfig | None = None,
-        hamming_prefilter: int | None = 26,
-        host_hamming_prefilter: int | None = 16,
+        hamming_prefilter: int | None = HAMMING_PREFILTER,
+        host_hamming_prefilter: int | None = HOST_HAMMING_PREFILTER,
     ):
         if num_perm % minhash_bands != 0:
             raise ValueError(

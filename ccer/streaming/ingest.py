@@ -25,8 +25,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ccer.operators.blocking import (
     block_keys,
     block_size_profile,
-    candidate_pairs,
     merge_profiles,
+    pair_prefilter,
     salt_oversized_blocks,
 )
 from ccer.operators.cluster import assign_clusters, connected_components
@@ -36,6 +36,47 @@ from ccer.operators.scoring import ScoringConfig, match_edges, score_pairs
 PAGE_SCHEMA_DDL = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
 )
+
+
+def pairs_touching(blocks_all: DataFrame, new_ids: DataFrame) -> DataFrame:
+    """Distinct candidate pairs (id_a < id_b) with at least one id in
+    ``new_ids``, from salted block rows (block_key, pass_id, id, simhash)
+    of old and new records alike.
+
+    The batch's block rows (the probe side) join every block row on
+    block_key, and each pair goes through the batch plan's SimHash
+    prefilter (``pair_prefilter``). The result equals
+    ``candidate_pairs(blocks_all)`` restricted to pairs that touch a new
+    id; pairs among old records are never generated.
+    """
+    left = blocks_all.join(new_ids, "id", "left_semi").select(
+        "block_key",
+        F.col("pass_id").alias("pass_a"),
+        F.col("id").alias("id_a"),
+        F.col("simhash").alias("fp_a"),
+    )
+    right = blocks_all.select(
+        "block_key",
+        F.col("pass_id").alias("pass_b"),
+        F.col("id").alias("id_b"),
+        F.col("simhash").alias("fp_b"),
+    )
+    return (
+        left.join(right, "block_key")
+        .filter(F.col("id_a") != F.col("id_b"))
+        # candidate_pairs takes a block's smallest pass id; the two rows of
+        # a block agree on it unless two passes' keys collide
+        .filter(
+            pair_prefilter(
+                F.least("pass_a", "pass_b"), F.col("fp_a"), F.col("fp_b")
+            )
+        )
+        .select(
+            F.least("id_a", "id_b").alias("id_a"),
+            F.greatest("id_a", "id_b").alias("id_b"),
+        )
+        .dropDuplicates(["id_a", "id_b"])
+    )
 
 
 def incremental_update(
@@ -63,13 +104,24 @@ def incremental_update(
     skew salting: only the BATCH's block rows are counted and the delta
     is merged into the prior profile (#distinct-keys rows of 20 bytes),
     so no per-batch aggregation ever re-scans the corpus's block rows.
+    The features pass runs exactly once per batch: its output is
+    materialized by an eager ``localCheckpoint``, which the profile
+    delta, the pair join, the scorer and the cluster assignment all read
+    (the returned frames read it too; it is freed when they are dropped).
     Per-batch work that necessarily touches the corpus: the pair join's
-    build side — a key-only shuffle, no signature or text movement. Only
-    pairs with ≥1 new-side record are scored: new block rows join
-    against ALL block rows (old ∪ new) — an equi-join whose probe side
-    is just the batch.
+    build side — a shuffle of slim block rows (key, pass, id, simhash),
+    no signature or text movement. Only pairs with ≥1 new-side record
+    are scored (``pairs_touching``): new block rows join against ALL
+    block rows (old ∪ new) — an equi-join whose probe side is just the
+    batch — and the batch plan's SimHash prefilter applies, so the
+    scored pair set equals the batch plan's prefiltered pair set
+    restricted to pairs that touch a new record.
     """
-    feats_new = extract_features(new_pages)
+    # every later step reads the features several times over (profile
+    # delta, both sides of the pair join, the new-id semi-join, the
+    # scorer's joins, the cluster assignment): without materializing,
+    # each would re-run the Python features pass on the batch
+    feats_new = extract_features(new_pages).localCheckpoint(eager=True)
     if prior_features is None:
         feats_all = feats_new
     else:
@@ -87,20 +139,7 @@ def incremental_update(
     blocks_all = salt_oversized_blocks(
         blocks_raw_all, block_cap=block_cap, profile=profile_all
     )
-    new_ids = feats_new.select("id").distinct()
-    blocks_new = blocks_all.join(new_ids, "id", "left_semi")
-
-    left = blocks_new.select("block_key", F.col("id").alias("id_a"))
-    right = blocks_all.select("block_key", F.col("id").alias("id_b"))
-    pairs = (
-        left.join(right, "block_key")
-        .filter(F.col("id_a") != F.col("id_b"))
-        .select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    pairs = pairs_touching(blocks_all, feats_new.select("id").distinct())
     new_edges = match_edges(score_pairs(pairs, feats_all, config))
     if prior_components is not None:
         prior_edges = prior_components.select(

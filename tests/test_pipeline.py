@@ -298,6 +298,20 @@ def test_resume_reads_a_64_bucket_workdir(spark, corpus, tmp_path):
         spark.conf.set("spark.sql.shuffle.partitions", before)
 
 
+def _spark_jobs(spark, name: str, fn) -> int:
+    """Spark jobs launched while ``fn()`` runs, counted under a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(name))
+    print(f"{name}: {jobs} Spark jobs")
+    return jobs
+
+
 # Spark jobs one cold run_pipeline call launches on the test corpus: 600
 # pages at 8 shuffle partitions. Raise it only with a measured reason: it
 # guards the per-call fixed cost (every job is a scheduling round trip).
@@ -305,15 +319,33 @@ PIPELINE_JOB_BUDGET = 27
 
 
 def test_run_pipeline_spark_job_budget(spark, corpus, tmp_path):
-    sc = spark.sparkContext
     pages = corpus.drop("true_cluster_id")
-    group = f"job-budget-{tmp_path.name}"
-    sc.setJobGroup(group, "run_pipeline job budget")
-    try:
-        run_pipeline(spark, pages, str(tmp_path))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    print(f"run_pipeline launched {len(jobs)} Spark jobs")
-    assert len(jobs) <= PIPELINE_JOB_BUDGET
+    jobs = _spark_jobs(
+        spark, f"job-budget-{tmp_path.name}", lambda: run_pipeline(spark, pages, str(tmp_path))
+    )
+    assert jobs <= PIPELINE_JOB_BUDGET
+
+
+# Spark jobs of one incremental_update batch (a quarter of the test corpus
+# by url hash, against checkpointed prior state of the rest) plus the
+# collect of its labels, at 8 shuffle partitions. Same rule as above.
+INGEST_JOB_BUDGET = 24
+
+
+def test_incremental_update_spark_job_budget(spark, corpus, tmp_path):
+    from ccer.streaming.ingest import incremental_update
+
+    pages = corpus.drop("true_cluster_id")
+    arriving = F.pmod(F.xxhash64("url"), F.lit(4)) == 0
+    f, b, c, _, p = (
+        df.localCheckpoint(eager=True)
+        for df in incremental_update(spark, None, None, pages.filter(~arriving))
+    )
+
+    def batch():
+        _, _, _, clusters, _ = incremental_update(
+            spark, f, c, pages.filter(arriving), prior_blocks=b, prior_profile=p
+        )
+        clusters.select("rid", "cluster_id").collect()
+
+    assert _spark_jobs(spark, f"ingest-budget-{tmp_path.name}", batch) <= INGEST_JOB_BUDGET

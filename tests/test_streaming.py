@@ -10,7 +10,7 @@ from ccer.operators.cluster import assign_clusters, connected_components
 from ccer.operators.features import extract_features
 from ccer.operators.scoring import match_edges, score_pairs
 from ccer.sources.pages import synthesize_pages
-from ccer.streaming.ingest import incremental_update, stream_ingest
+from ccer.streaming.ingest import incremental_update, pairs_touching, stream_ingest
 
 
 def test_incremental_equals_batch(spark):
@@ -50,29 +50,85 @@ def test_incremental_equals_batch(spark):
     pages.unpersist()
 
 
-def test_incremental_profile_skips_corpus_recount(spark):
-    """With prior_blocks + prior_profile supplied, the second batch's
-    salting must derive its block-size profile from (prior profile ∪
-    batch delta) — the physical plan may not re-aggregate the prior
-    corpus's block rows (the last O(corpus) per-batch shuffle)."""
+@pytest.fixture(scope="module")
+def first_batch(spark):
+    """A 200-page corpus split two ways by url hash, the first half
+    ingested from empty state with every returned frame checkpointed, as
+    a streaming caller holds its prior state. Yields (second half,
+    features, raw blocks, components, profile) of the first batch."""
     pages = synthesize_pages(spark, 200, seed=7, with_labels=False).cache()
     pages.count()
     p1 = pages.filter(F.xxhash64("url") % 2 == 0)
     p2 = pages.subtract(p1)
     f1, b1, c1, _, pr1 = incremental_update(spark, None, None, p1)
-    f1 = f1.localCheckpoint(eager=True)
-    b1 = b1.localCheckpoint(eager=True)
-    pr1 = pr1.localCheckpoint(eager=True)
-    c1 = c1.localCheckpoint(eager=True)
+    yield (p2,) + tuple(df.localCheckpoint(eager=True) for df in (f1, b1, c1, pr1))
+    pages.unpersist()
+
+
+def _scanned_rdd_ids(df) -> set[int]:
+    """Ids of the RDDs (checkpoints) that ``df``'s optimized plan scans."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    nodes = (leaves.apply(i) for i in range(leaves.size()))
+    return {n.rdd().id() for n in nodes if n.nodeName() == "LogicalRDD"}
+
+
+def test_incremental_profile_skips_corpus_recount(spark, first_batch):
+    """With prior_blocks + prior_profile supplied, the second batch's
+    salting must derive its block-size profile from (prior profile ∪
+    batch delta) — the physical plan may not re-aggregate the prior
+    corpus's block rows (the last O(corpus) per-batch shuffle)."""
+    p2, f1, b1, c1, pr1 = first_batch
+    (f1_rdd,) = _scanned_rdd_ids(f1)
+    (b1_rdd,) = _scanned_rdd_ids(b1)
+    (pr1_rdd,) = _scanned_rdd_ids(pr1)
+
+    def counts_batch_only(profile) -> bool:
+        scanned = _scanned_rdd_ids(profile)
+        return pr1_rdd in scanned and not scanned & {b1_rdd, f1_rdd}
+
+    # pr2 = merge(pr1 checkpoint, count(batch block rows)): it scans pr1's
+    # checkpoint and the batch's own features checkpoint, never the prior
+    # corpus's block rows (b1) or features (f1)
     _, _, _, _, pr2 = incremental_update(
         spark, f1, c1, p2, prior_blocks=b1, prior_profile=pr1
     )
-    # pr2 = merge(pr1 checkpoint, count(batch block rows)). The four
-    # prior-state checkpoints all surface as "Scan ExistingRDD"; exactly
-    # ONE (pr1) may appear in pr2's plan. A fallback that re-counted
-    # blocks_raw_all would pull in b1's checkpoint as a second scan.
-    pr2_plan = pr2._jdf.queryExecution().toString()
-    assert pr2_plan.count("Scan ExistingRDD") == 1, pr2_plan
+    assert counts_batch_only(pr2), pr2._jdf.queryExecution().toString()
+    # without the prior profile the count falls back to every block row,
+    # b1's included: the check above must tell the two plans apart
+    _, _, _, _, recount = incremental_update(spark, f1, c1, p2, prior_blocks=b1)
+    assert not counts_batch_only(recount)
+
+
+def test_incremental_features_pass_runs_once(spark, first_batch):
+    """The batch's Python features pass is materialized inside the call:
+    the returned clusters' executed plan holds no Python node, so
+    collecting them does not run the features kernel again."""
+    p2, f1, b1, c1, pr1 = first_batch
+    _, _, _, clusters, _ = incremental_update(
+        spark, f1, c1, p2, prior_blocks=b1, prior_profile=pr1
+    )
+    plan = clusters._jdf.queryExecution().executedPlan().toString()
+    for node in ("MapInPandas", "MapInArrow"):
+        assert node not in plan, plan
+
+
+def test_pairs_touching_equals_batch_pairs(spark):
+    """The incremental pair set is the batch plan's candidate_pairs over
+    every page, restricted to pairs with at least one new id — the same
+    SimHash prefilter, no superset."""
+    pages = synthesize_pages(spark, 300, seed=42, with_labels=False).cache()
+    pages.count()
+    feats = extract_features(pages).localCheckpoint(eager=True)
+    blocks = salt_oversized_blocks(block_keys(feats)).localCheckpoint(eager=True)
+    new_ids = feats.filter(F.xxhash64("url") % 2 == 0).select("id")
+    new = [r["id"] for r in new_ids.collect()]
+    expected = candidate_pairs(blocks).filter(
+        F.col("id_a").isin(new) | F.col("id_b").isin(new)
+    )
+    got = pairs_touching(blocks, new_ids)
+    assert got.count() > 0
+    assert got.exceptAll(expected).count() == 0
+    assert expected.exceptAll(got).count() == 0
     pages.unpersist()
 
 
